@@ -2,22 +2,18 @@
 near-duplicate *pairs* (minhash/ngram/embedding dedup output) into duplicate
 *groups* with one canonical survivor per group.
 
-Algorithm: iterative minimum-label propagation. Every node starts labeled
-with its own id; each round every node adopts the minimum label among itself
-and its neighbors; converged when no label changes. Rounds needed = graph
-diameter (near-dup graphs are overwhelmingly tiny cliques/chains, so 2-4
-rounds in practice; ``max_iter`` bounds pathological chains).
+Algorithm: alternating large-star/small-star rounds (Kiveris et al. 2014,
+"Connected Components in MapReduce and Beyond"). Every node ends labeled
+with the minimum node id of its component, in O(log² n) rounds regardless
+of the graph's diameter, so adversarial long chains need no special case.
 
 Scale design (100 TB corpora → billions of nodes, edges ≪ nodes²):
-  * each round is one shuffle: edges ⋈ labels on node id, then a min-
-    aggregate on the destination id — both hash on the same key, so AQE
-    reuses the exchange layout;
-  * convergence check is a driver-side label-sum comparison (labels are
-    elementwise non-increasing, so an unchanged exact sum is a fixpoint
-    proof) — one scalar aggregate per round, no new-vs-old join;
-  * for adversarial long-chain graphs switch to the large-star/small-star
-    algorithm (Kiveris et al. 2014, "Connected Components in MapReduce"),
-    which converges in O(log^2 n) rounds — same join/agg primitives.
+  * every round is edge-local — a min-aggregate and a join over the edge
+    list itself, no label table — so a round costs O(edges);
+  * only edge-touched nodes enter the loop; untouched singletons are
+    unioned back once at the end, so no round costs O(corpus);
+  * the convergence check is one scalar aggregate per round over the
+    just-materialized edge set, no old-vs-new join.
 """
 
 from __future__ import annotations
@@ -71,181 +67,20 @@ class _constraint_propagation_off:
         return False
 
 
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Label every node with the minimum node id of its connected component.
-
-    ``nodes``: one row per node (``id_col``); isolated nodes allowed.
-    ``edges``: undirected pairs (``src_col``, ``dst_col``), any orientation.
-    Returns (id_col, component) — component = min id reachable from the node.
-    """
-    # Catalyst's Union constraint rewrite chokes ("key not found: _id#N")
-    # when an input plan contains a localCheckpoint barrier whose
-    # LogicalRDD carries constraints referencing pre-checkpoint attribute
-    # ids (observed on Spark 4.1 when edges come from minhash_lsh_pairs,
-    # whose gram pipeline checkpoints lazily). Constraint propagation
-    # buys nothing here — every round materializes eagerly and the
-    # per-round plans are two joins deep — so disable it for the loop
-    # and restore the caller's setting after. The toggle is refcounted
-    # under a module lock (concurrent catalog queries share the session
-    # conf), and the loop EAGERLY checkpoints its final union before the
-    # conf is restored, so every Union this workaround exists for is
-    # optimized while the conf is off — the returned frame is a
-    # materialized LogicalRDD, safe to analyze under any conf.
-    with _constraint_propagation_off(nodes.sparkSession):
-        return _connected_components_loop(
-            nodes, edges, id_col, src_col, dst_col, max_iter
-        )
-
-
-def _connected_components_loop(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str,
-    src_col: str,
-    dst_col: str,
-    max_iter: int,
-) -> DataFrame:
-    # Symmetrize once; edges are reused every round so cache them.
-    sym = (
-        edges.select(F.col(src_col).alias("_a"), F.col(dst_col).alias("_b"))
-        .union(edges.select(F.col(dst_col).alias("_a"), F.col(src_col).alias("_b")))
-        .distinct()
-    )
-    sym.cache()
-
-    # Only edge-touched nodes can ever change labels — propagate over that
-    # (typically tiny) subgraph and union the untouched singletons at the
-    # end. On a 100 TB corpus the near-dup graph is orders of magnitude
-    # smaller than the node set; looping over all nodes would make every
-    # round cost O(corpus) instead of O(edges).
-    # localCheckpoint (eager): the returned lazy frame's singleton branch
-    # must read materialized ids, not re-derive them through the (possibly
-    # very expensive) edge-producing plan after the loop finishes.
-    touched = (
-        sym.select(F.col("_a").alias("_id")).distinct().localCheckpoint(eager=True)
-    )
-    labels = touched.select("_id", F.col("_id").alias("_lbl"))
-
-    # Convergence test: labels only ever decrease elementwise (min of self,
-    # neighbors, label-of-label), so the label SUM is strictly decreasing
-    # until the fixpoint — an unchanged sum proves convergence. One scalar
-    # aggregate per round on the just-materialized frame, no new-vs-old
-    # join. decimal(38,0) keeps the sum exact at billions of 64-bit ids.
-    def _label_sum(frame: DataFrame):
-        return frame.agg(
-            F.sum(F.col("_lbl").cast("decimal(38,0)")).alias("_s")
-        ).collect()[0]["_s"]
-
-    prev_sum = _label_sum(labels)
-    for _ in range(max_iter):
-        # Neighbor labels: for each edge (a, b), b receives a's current label.
-        neighbor = (
-            sym.join(labels, sym["_a"] == labels["_id"])
-            .select(F.col("_b").alias("_id"), F.col("_lbl"))
-        )
-        # localCheckpoint truncates the lineage each round — without it the
-        # logical plan nests one join+agg per iteration and Catalyst
-        # re-optimizes an exponentially growing tree (driver OOM by ~10
-        # rounds). Eager so the convergence check below reads materialized
-        # blocks. (Cluster caveat: localCheckpoint blocks don't survive
-        # executor loss; long jobs on preemptible nodes should use
-        # checkpoint() with a reliable checkpoint dir instead.)
-        propagated = (
-            labels.union(neighbor)
-            .groupBy("_id")
-            .agg(F.min("_lbl").alias("_lbl"))
-        )
-        # Pointer-doubling shortcut: additionally adopt the label OF my
-        # label ("my root's root"), halving path lengths every round —
-        # convergence drops from O(diameter) to O(log diameter) rounds,
-        # which is what makes adversarial chain graphs safe under a small
-        # max_iter. One extra self-join per round on the already-small
-        # label table.
-        p = propagated
-        new_labels = (
-            p.alias("x")
-            .join(
-                p.select(F.col("_id").alias("_lid"), F.col("_lbl").alias("_llbl")),
-                F.col("x._lbl") == F.col("_lid"),
-                "left",
-            )
-            .select(
-                F.col("x._id").alias("_id"),
-                F.least(
-                    F.col("x._lbl"), F.coalesce(F.col("_llbl"), F.col("x._lbl"))
-                ).alias("_lbl"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        cur_sum = _label_sum(new_labels)
-        labels = new_labels
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iter} rounds; "
-            "the graph's effective diameter exceeds 2^max_iter — raise "
-            "max_iter (rounds are O(log diameter) with shortcutting)"
-        )
-
-    singletons = (
-        nodes.select(F.col(id_col).alias("_id"))
-        .join(touched, "_id", "left_anti")
-        .select("_id", F.col("_id").alias("_lbl"))
-    )
-    # Eager checkpoint: (a) optimizes the final Union while the caller's
-    # constraintPropagation workaround is still active (the returned
-    # frame would otherwise be analyzed at action time, after the conf
-    # is restored); (b) the (id, component) output feeds joins in every
-    # consumer, so materializing the two-long-column frame once is the
-    # consumption that would happen anyway.
-    out = (
-        labels.union(singletons)
-        .select(F.col("_id").alias(id_col), F.col("_lbl").alias("component"))
-        .localCheckpoint(eager=True)
-    )
-    sym.unpersist()
-    return out
-
-
 def duplicate_clusters(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str,
     pair_a: str = "id_a",
     pair_b: str = "id_b",
-    engine: str = "star",
 ) -> DataFrame:
     """Cluster near-duplicate pairs into groups; canonical = min id.
 
     Returns (id_col, cluster_id, is_canonical). Downstream dedup keeps
     ``is_canonical`` rows — one survivor per duplicate group, singletons
     survive trivially (their cluster is themselves).
-
-    ``engine``: "star" (default — large-star/small-star, O(log² n)
-    rounds edge-locally: no label table to join, no per-round eager
-    label materialization; measured stable 25-28 s at ~sf1 where
-    min-label swung 37-170 s under session block pressure) or
-    "minlabel" (shortcutted label propagation — kept as the alternative
-    for property tests and for graphs where its per-round cost wins).
-    Both produce the identical component = min-reachable-id labeling,
-    so oracles are engine-blind.
     """
-    if engine == "minlabel":
-        cc = connected_components
-    elif engine == "star":
-        cc = connected_components_star
-    else:
-        raise ValueError(f"unknown clustering engine: {engine!r}")
-    comp = cc(
+    comp = connected_components(
         docs.select(id_col), pairs, id_col=id_col, src_col=pair_a, dst_col=pair_b
     )
     return comp.select(
@@ -255,7 +90,7 @@ def duplicate_clusters(
     )
 
 
-def connected_components_star(
+def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str = "id",
@@ -263,36 +98,42 @@ def connected_components_star(
     dst_col: str = "dst",
     max_iter: int = 30,
 ) -> DataFrame:
-    """Connected components via alternating large-star/small-star rounds
-    (Kiveris et al. 2014, "Connected Components in MapReduce and Beyond").
+    """Label every node with the minimum node id of its connected component.
 
-    Same contract as :func:`connected_components`; the DEFAULT engine for
-    :func:`duplicate_clusters` since round 8 — provably O(log² n) rounds
-    regardless of diameter, and every round is edge-local (two groupBy
-    aggregations, no label table to join), so per-round cost is O(|edges|)
-    with no auxiliary state. Measured stable (25-28 s at ~sf1) where
-    min-label propagation swung 37-170 s with session state; min-label is
-    kept as the alternative engine. Property-tested equal to min-label
-    and to sequential union-find.
+    ``nodes``: one row per node (``id_col``); isolated nodes allowed.
+    ``edges``: undirected pairs (``src_col``, ``dst_col``), any orientation.
+    Returns (id_col, component) — component = min id reachable from the node.
+    Raises ``RuntimeError`` if the edge set has not reached its fixpoint
+    after ``max_iter`` large-star/small-star round pairs.
 
     Mechanics per Kiveris: maintain a parent pointer as an edge list
     (u, parent). large-star: for every node u, connect every STRICTLY
     LARGER neighbor to min(N(u) ∪ {u}). small-star: connect every
     neighbor <= u (and u itself) to that same min. Alternating the two
     contracts every tree toward its minimum; fixpoint = forest of stars.
-    Convergence check mirrors the default engine's exact-sum argument:
-    the (node, parent) pair-sum only decreases.
+    Measured stable (25-28 s at ~sf1) where shortcutted min-label
+    propagation swung 37-170 s under session block pressure.
     """
-    # Same Spark 4.1 Union/localCheckpoint constraint-rewrite hazard as
-    # the min-label engine (the symmetrize/withself unions sit directly
-    # above whatever lazily-checkpointed plan produced the edges).
+    # Catalyst's Union constraint rewrite chokes ("key not found: _id#N")
+    # when an input plan contains a localCheckpoint barrier whose
+    # LogicalRDD carries constraints referencing pre-checkpoint attribute
+    # ids (observed on Spark 4.1 when edges come from minhash_lsh_pairs,
+    # whose gram pipeline checkpoints lazily; the symmetrize/withself
+    # unions sit directly above that plan). Constraint propagation buys
+    # nothing here — every round materializes eagerly — so disable it for
+    # the loop and restore the caller's setting after. The toggle is
+    # refcounted under a module lock (concurrent catalog queries share the
+    # session conf), and the loop EAGERLY checkpoints its final union
+    # before the conf is restored, so every Union this workaround exists
+    # for is optimized while the conf is off — the returned frame is a
+    # materialized LogicalRDD, safe to analyze under any conf.
     with _constraint_propagation_off(nodes.sparkSession):
-        return _connected_components_star_loop(
+        return _connected_components_loop(
             nodes, edges, id_col, src_col, dst_col, max_iter
         )
 
 
-def _connected_components_star_loop(
+def _connected_components_loop(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str,
@@ -331,11 +172,11 @@ def _connected_components_star_loop(
             )
         return out.distinct()
 
-    # Unlike min-label (where an unchanged label-sum PROVES the fixpoint
-    # by monotonicity), star rounds rearrange edges non-monotonically, so
-    # the stop test is set equality up to hash collision: (count, id-sum,
-    # xxhash64 checksum) of the distinct edge set — one scalar aggregate
-    # per round, no old-vs-new join.
+    # Star rounds rearrange edges non-monotonically (no label-sum
+    # argument proves the fixpoint), so the stop test is set equality up
+    # to hash collision: (count, id-sum, xxhash64 checksum) of the
+    # distinct edge set — one scalar aggregate per round, no old-vs-new
+    # join.
     def _edge_key(frame: DataFrame):
         row = frame.agg(
             F.count(F.lit(1)).alias("_n"),
@@ -344,6 +185,12 @@ def _connected_components_star_loop(
         ).collect()[0]
         return (row["_n"], row["_s"], row["_h"])
 
+    # localCheckpoint truncates the lineage each round — without it the
+    # logical plan nests two stars per round and Catalyst re-optimizes an
+    # ever-growing tree. Eager so the convergence check reads materialized
+    # blocks. (Cluster caveat: localCheckpoint blocks don't survive
+    # executor loss; long jobs on preemptible nodes should use
+    # checkpoint() with a reliable checkpoint dir instead.)
     prev = None
     for _ in range(max_iter):
         e = _star(e, large=True).localCheckpoint(eager=True)
@@ -354,7 +201,7 @@ def _connected_components_star_loop(
         prev = key
     else:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} rounds"
+            f"connected_components did not converge in {max_iter} rounds"
         )
 
     # Fixpoint is a star forest: every node points at its root (roots
@@ -366,9 +213,12 @@ def _connected_components_star_loop(
         .join(touched, "_u", "left_anti")
         .select("_u", F.col("_u").alias("_lbl"))
     )
-    # Eager for the same two reasons as the min-label engine's final
-    # union: optimize under the disabled-conf guard, and materialize the
-    # two-column labeling every consumer joins against anyway.
+    # Eager checkpoint: (a) optimizes the final Union while the
+    # constraintPropagation workaround is still active (the returned
+    # frame would otherwise be analyzed at action time, after the conf is
+    # restored); (b) the (id, component) output feeds joins in every
+    # consumer, so materializing the two-column labeling once is the
+    # consumption that would happen anyway.
     return (
         roots.union(singles)
         .select(F.col("_u").alias(id_col), F.col("_lbl").alias("component"))

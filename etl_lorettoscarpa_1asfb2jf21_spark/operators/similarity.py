@@ -1056,180 +1056,6 @@ def _int_sqdist_expr(a: str, b: str):
     )
 
 
-def _kmeans_unroll_max() -> int:
-    """Row-count ceiling for the all-JVM unrolled Lloyd plan (below).
-
-    The unrolled plan wins where the per-iteration DRIVER round-trip
-    (fresh kernel plan + Catalyst pass + collect, measured ~0.45 s warm
-    each, round-12 profiling) dominates; the kernel chain wins where the
-    per-ROW assignment cost dominates, because its numpy matmul is far
-    cheaper than the interpreted zip_with/aggregate argmin the unrolled
-    expressions pay (round-10: the interpreted fold was the measured
-    cliff at 200k x 128-d). **Default 0 = OFF**: measured at sf0.1
-    (2000x64-d PQ build, n_iter=3, warm, same window) the kernel chain
-    runs 1.8-2.0 s total vs the unrolled plan's 4.5-5.2 s — and that is
-    AFTER fixing three real costs in the unrolled form (SQL-string
-    expressions instead of ~150 Py4J lambda builds per build,
-    single-reference linear plan instead of per-iteration tree doubling,
-    dim-unrolled arithmetic + spread instead of single-task zip_with
-    folds). Root causes that remain: each AQE exchange stage costs about
-    as much as a whole job round-trip on this host, the unrolled chain
-    needs >=2 aggregate exchanges + 1 broadcast per iteration vs the
-    kernel chain's one shuffle+collect, and lazy localCheckpoint under
-    AQE executes the chain's intermediate stages eagerly anyway. Kept
-    env-gated for hardware where driver latency dominates stage floors
-    (e.g. a remote driver); the equality test (tests/test_operators.py)
-    pins bit-identity so flipping the gate can never change values.
-    When 0, builders skip the gate count job entirely — the default
-    path is byte-for-byte the round-12 plan."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_KMEANS_UNROLL_MAX", "0"))
-
-
-def _unrolled_pq_lloyd(
-    frame: DataFrame,
-    vec_col: str,
-    n_sub: int,
-    sub_dim: int,
-    n_cells: int,
-    n_iter: int,
-    init_cents: DataFrame,
-):
-    """ALL-JVM multi-iteration fixed-point Lloyd (round-12 verdict #1:
-    'collapse the Lloyd iteration chain'): the whole n_iter recurrence is
-    ONE Catalyst plan — each iteration's codebook is a one-row broadcast
-    aggregate consumed by the next iteration's assignment — so a build
-    pays ZERO per-iteration driver round-trips (no kernel re-pickle, no
-    re-planning, no collect) where the kernel chain pays one ~0.45 s
-    job+collect floor per iteration. Spark's exchange reuse collapses the
-    diamond consumers of each iteration's broadcast (verified in the
-    committed plans: one corpus-pass aggregate per iteration).
-
-    Bit-identical to the kernel-chain recurrence (equality-tested in
-    tests/test_operators.py): the per-subspace assignment is the same
-    ``min(d²·n_cells + cell) % n_cells`` int64 packing the kernels
-    compute, the update is the same order-free integer sums with
-    truncating ``div``, and empty (sub, cell) pairs keep their previous
-    centroid via the coalesce in the merge transform.
-
-    ``init_cents``: (_sub INT, _cell INT, _cv ARRAY<BIGINT>) — in-plan.
-    Returns (cents, attach) where ``cents`` is the final codebook in the
-    same schema and ``attach(df)`` adds the one-row broadcast codebook
-    column ``_cb`` plus the final per-row code array ``_codes``
-    (ARRAY<BIGINT>, matching pq_codes_int_batch_udf's output type).
-
-    Every bulky expression is ONE ``F.expr`` SQL string: the nested
-    lambda form of the same tree (filter/transform/aggregate Columns)
-    costs hundreds of Py4J round-trips PER ITERATION to construct —
-    measured ~5 s of pure plan-build latency per PQ build, swamping the
-    chain it replaces (the same lesson as the round-11 array-of-sums
-    F.expr in the kernel loop).
-    """
-    sums_sql = "array(" + ",".join(f"sum(_sv[{i}])" for i in range(sub_dim)) + ")"
-
-    def one_code_sql(s: int) -> str:
-        # fully dim-unrolled squared distance (arr[i] is 0-based): a
-        # zip_with + aggregate fold pays per-element lambda dispatch and
-        # an array allocation per (row, cell) — measured ~2x the whole
-        # chain's execution at 2000x64-d
-        sqd = " + ".join(
-            f"({vec_col}[{s * sub_dim + i}] - c._cv[{i}]) * "
-            f"({vec_col}[{s * sub_dim + i}] - c._cv[{i}])"
-            for i in range(sub_dim)
-        )
-        packed = (
-            f"transform(filter(_cb, c -> c._sub = {s}), "
-            f"c -> ({sqd}) * CAST({n_cells} AS BIGINT) "
-            "+ CAST(c._cell AS BIGINT))"
-        )
-        return f"CAST(array_min({packed}) % {n_cells} AS BIGINT)"
-
-    codes_sql = "array(" + ",".join(one_code_sql(s) for s in range(n_sub)) + ")"
-    slices_sql = "array(" + ",".join(
-        f"slice({vec_col}, {s * sub_dim + 1}, {sub_dim})" for s in range(n_sub)
-    ) + ")"
-    merge_sql = (
-        "transform(_cb, p -> named_struct("
-        "'_sub', p._sub, '_cell', p._cell, "
-        "'_cv', coalesce(get(filter(_nb, "
-        "x -> x._sub = p._sub AND x._cell = p._cell), 0)._cv, p._cv)))"
-    )
-
-    # the small-regime frame is typically a one-file scan (single
-    # partition): spread it so the interpreted assignment runs wide
-    # instead of in one task (§2.5 input skew; values order-free)
-    frame = spread(frame)
-
-    cb = init_cents.agg(
-        F.array_sort(F.collect_list(F.struct("_sub", "_cell", "_cv"))).alias("_cb")
-    )
-    for _ in range(n_iter):
-        # ONE reference to the previous codebook per iteration: the merge
-        # reads _cb off the same crossJoin row the assignment uses (the
-        # column is constant, so first() per group is deterministic and
-        # map-side partial aggregation ships it once per group, not per
-        # row). A second reference (cb.crossJoin(newb)) would DOUBLE the
-        # logical plan per iteration — measured ~4 s of eager analysis
-        # per build at n_iter=3.
-        pairs = (
-            frame.crossJoin(F.broadcast(cb))
-            .select(
-                "_cb",
-                F.posexplode(
-                    F.arrays_zip(
-                        F.expr(codes_sql).alias("_c"),
-                        F.expr(slices_sql).alias("_v"),
-                    )
-                ).alias("_sub", "_z"),
-            )
-            .select(
-                "_cb",
-                "_sub",
-                F.col("_z._c").cast("int").alias("_cell"),
-                F.col("_z._v").alias("_sv"),
-            )
-        )
-        upd = (
-            pairs.groupBy("_sub", "_cell")
-            .agg(
-                F.expr(sums_sql).alias("_sv2"),
-                F.count(F.lit(1)).alias("_n"),
-                F.first("_cb").alias("_cb"),
-            )
-            .select(
-                F.struct(
-                    F.col("_sub"),
-                    F.col("_cell"),
-                    F.expr("transform(_sv2, s -> s div _n)").alias("_cv"),
-                ).alias("_u"),
-                "_cb",
-            )
-        )
-        cb = upd.agg(
-            F.collect_list("_u").alias("_nb"), F.first("_cb").alias("_cb")
-        ).select(F.expr(merge_sql).alias("_cb"))
-
-    # lazy checkpoint of the FINAL one-row codebook: the artifact feeds
-    # several downstream actions (store/codes projections, searches,
-    # save_ann_index) — without the barrier each separate ACTION would
-    # re-execute the whole n_iter chain (exchange reuse only spans one
-    # query); with it the chain runs exactly once
-    cb = cb.localCheckpoint(eager=False)
-    cents = cb.select(F.explode("_cb").alias("_e")).select(
-        F.col("_e._sub").alias("_sub"),
-        F.col("_e._cell").alias("_cell"),
-        F.col("_e._cv").alias("_cv"),
-    )
-
-    def attach(df: DataFrame) -> DataFrame:
-        return df.crossJoin(F.broadcast(cb)).withColumn(
-            "_codes", F.expr(codes_sql)
-        )
-
-    return cents, attach
-
-
 def quantized_kmeans_cells(
     corpus: DataFrame,
     corpus_id: str = "c_id",
@@ -1239,8 +1065,6 @@ def quantized_kmeans_cells(
     scale: int = 10**6,
     use_arrow: bool = True,
     with_vec: bool = False,
-    n_rows: int | None = None,
-    dim: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """DISTRIBUTED fixed-point Lloyd: returns (centroids(_cell,_cvec),
     assignment(corpus_id,_cell)) after ``n_iter`` exact-integer rounds.
@@ -1264,14 +1088,6 @@ def quantized_kmeans_cells(
     assignment pass + one posexplode hash-aggregate — the corpus is never
     collected (only the n_centroids-row centroid table moves to the
     driver/executors, whether as broadcast literals or kernel constants).
-
-    ``n_rows``/``dim`` are optional caller hints for the env-gated
-    unroll experiment below (skip its bounded gate aggregate when the
-    caller already knows them). The experiment — the whole recurrence as
-    ONE unrolled Catalyst tree (see _unrolled_pq_lloyd) — is OFF by
-    default after measurement (see _kmeans_unroll_max); values are
-    bit-identical on both sides (tests/test_operators.py), so flipping
-    it can never change a result.
 
     ``use_arrow=True`` (default) runs each assignment pass through the
     EXACT-INTEGER Arrow kernel (functions.vectors.
@@ -1307,17 +1123,6 @@ def quantized_kmeans_cells(
     )
 
     def assign(cc: DataFrame) -> DataFrame:
-        if use_arrow:
-            from ..functions.vectors import nearest_cell_int_batch_udf
-
-            cents_rows = sorted(
-                (int(r["_cell"]), [int(x) for x in r["_cvec"]])
-                for r in cc.collect()  # n_centroids rows, never the corpus
-            )
-            kern = nearest_cell_int_batch_udf(cents_rows, n_centroids)
-            return corpq.select(
-                F.col(corpus_id), kern(F.col("_qv")).alias("_cell")
-            )
         d = corpq.crossJoin(F.broadcast(cc))
         packed = _int_sqdist_expr("_qv", "_cvec") * n_centroids + F.col("_cell")
         return (
@@ -1328,36 +1133,6 @@ def quantized_kmeans_cells(
         )
 
     if use_arrow:
-        # Env-gated experiment (measured OFF by default — see
-        # _kmeans_unroll_max): corpora under the cap take the UNROLLED
-        # all-JVM plan; the gate aggregate (count + dim) only runs when
-        # the experiment is enabled, so the default path is job-for-job
-        # the round-12 kernel chain. Values are bit-identical on both
-        # sides of the gate (equality-tested).
-        um = _kmeans_unroll_max()
-        if um > 0 and (n_rows is None or dim is None):
-            row0 = corpq.agg(
-                F.count(F.lit(1)).alias("n"), F.min(F.size("_qv")).alias("d")
-            ).first()
-            n_g = int(row0["n"])
-            dim_g = int(row0["d"]) if row0["d"] is not None else None
-        else:
-            n_g, dim_g = n_rows, dim
-        if um > 0 and n_g and dim_g and n_g <= um:
-            init = cents.select(
-                F.lit(0).cast("int").alias("_sub"),
-                F.col("_cell").cast("int").alias("_cell"),
-                F.col("_cvec").alias("_cv"),
-            )
-            fcents, attach = _unrolled_pq_lloyd(
-                corpq, "_qv", 1, dim_g, n_centroids, n_iter, init
-            )
-            out_c = fcents.select("_cell", F.col("_cv").alias("_cvec"))
-            keep = [F.col(corpus_id)] + ([F.col("_qv")] if with_vec else [])
-            assigned = attach(corpq).select(
-                *keep, F.get("_codes", 0).alias("_cell")
-            )
-            return out_c, assigned
         # The kernel path keeps the CENTROIDS ON THE DRIVER between
         # iterations (they are collected for the kernel constant anyway —
         # a bounded n_centroids×dim int artifact, same rule as PQ
@@ -1893,7 +1668,6 @@ def build_pq_index(
     corpus_id: str = "c_id",
     corpus_vec: str = "c_vec",
     use_arrow: bool = True,
-    n_rows: int | None = None,
 ) -> dict:
     """Train + encode the flat-PQ index (see pq_topk_quantized): exact
     integer per-subspace Lloyd codebooks, then every corpus vector
@@ -1931,18 +1705,6 @@ def build_pq_index(
         )
 
     def assign(cc: DataFrame) -> DataFrame:
-        if use_arrow:
-            from ..functions.vectors import pq_codes_int_batch_udf
-
-            cb_rows = [
-                (int(r["_sub"]), int(r["_cell"]), [int(x) for x in r["_cv"]])
-                for r in cc.collect()  # n_subspaces*n_codes rows only
-            ]
-            kern = pq_codes_int_batch_udf(cb_rows, n_codes, sub_dim)
-            return corpq.select(
-                F.col(corpus_id),
-                F.posexplode(kern(F.col("_qv"))).alias("_sub", "_cell"),
-            )
         d = subs.join(F.broadcast(cc), "_sub")
         packed = _int_sqdist_expr("_sv", "_cv") * n_codes + F.col("_cell")
         return (
@@ -1955,42 +1717,6 @@ def build_pq_index(
         )
 
     if use_arrow:
-        # Env-gated experiment (measured OFF by default — see
-        # _kmeans_unroll_max): the whole per-subspace Lloyd recurrence as
-        # one unrolled Catalyst tree. Values bit-identical
-        # (equality-tested); no gate job when disabled.
-        um = _kmeans_unroll_max()
-        n_g = n_rows if n_rows is not None else (corpq.count() if um > 0 else None)
-        if um > 0 and n_g and n_g <= um:
-            w_h = Window.orderBy(F.col(corpus_id))
-            head = (
-                corpq.orderBy(corpus_id)
-                .limit(n_codes)
-                .select(
-                    (F.row_number().over(w_h) - 1).cast("int").alias("_cell"),
-                    "_qv",
-                )
-            )
-            init = head.select(
-                "_cell",
-                F.posexplode(
-                    F.array(
-                        *[
-                            F.slice("_qv", s * sub_dim + 1, sub_dim)
-                            for s in range(n_subspaces)
-                        ]
-                    )
-                ).alias("_sub", "_cv"),
-            ).select(F.col("_sub").cast("int").alias("_sub"), "_cell", "_cv")
-            cents, attach = _unrolled_pq_lloyd(
-                corpq, "_qv", n_subspaces, sub_dim, n_codes, n_iter, init
-            )
-            codes_wide = attach(corpq).select(F.col(corpus_id), "_codes")
-            meta = _index_meta(
-                corpus, "pq", n_subspaces=n_subspaces, n_codes=n_codes,
-                scale=scale, dim=dim,
-            )
-            return {"codebook": cents, "codes": codes_wide, "meta": meta}
         # Same driver-side codebook recurrence as build_ivfpq_index (one
         # job per iteration: kernel map + positional zip + per-(sub,cell)
         # array-of-sums agg; truncating means replayed exactly in Python;
@@ -2380,7 +2106,6 @@ def build_ivfpq_index(
     corpus_id: str = "c_id",
     corpus_vec: str = "c_vec",
     use_arrow: bool = True,
-    n_rows: int | None = None,
 ) -> dict:
     """Train + encode the IVFADC index (see ivfpq_topk_quantized): the
     coarse quantizer, the residual PQ codebooks, and every vector's
@@ -2405,22 +2130,13 @@ def build_ivfpq_index(
         2 * scale, 2 * scale, dim, max(n_centroids, n_codes)
     )
 
-    # one corpus count feeds BOTH unroll gates (coarse k-means and the
-    # residual PQ below — res has exactly one row per corpus row) — and
-    # only when the env-gated unroll experiment is ON (default off: no
-    # gate job at all; see _kmeans_unroll_max)
-    _um = _kmeans_unroll_max()
-    n_g = n_rows if n_rows is not None else (
-        corpus.count() if (use_arrow and _um > 0) else None
-    )
-
     # 1. coarse quantizer + cell assignment (with_vec: the assignment
     #    carries the quantized vector, so the residual projection below
     #    needs NO join back to a separately re-quantized corpus — that
     #    join was a second corpus-sized shuffle/broadcast per build)
     cents, af = quantized_kmeans_cells(
         corpus, corpus_id, corpus_vec, n_centroids, n_iter, scale, use_arrow,
-        with_vec=True, n_rows=n_g, dim=dim,
+        with_vec=True,
     )
 
     # 2. integer residuals against the assigned centroid — a map-side
@@ -2457,18 +2173,6 @@ def build_ivfpq_index(
         )
 
     def assign(cc: DataFrame) -> DataFrame:
-        if use_arrow:
-            from ..functions.vectors import pq_codes_int_batch_udf
-
-            cb_rows = [
-                (int(r["_sub"]), int(r["_cell"]), [int(x) for x in r["_cv"]])
-                for r in cc.collect()
-            ]
-            kern = pq_codes_int_batch_udf(cb_rows, n_codes, sub_dim)
-            return res.select(
-                F.col(corpus_id),
-                F.posexplode(kern(F.col("_rv"))).alias("_sub", "_code"),
-            )
         d = subs.join(F.broadcast(cc), "_sub")
         packed = _int_sqdist_expr("_sv", "_cv") * n_codes + F.col("_cell")
         return (
@@ -2480,43 +2184,6 @@ def build_ivfpq_index(
             )
         )
 
-    if use_arrow and _um > 0 and n_g and n_g <= _um:
-        # Env-gated experiment (measured OFF by default — see
-        # _kmeans_unroll_max): the residual PQ training and encode as ONE
-        # unrolled Catalyst plan. Values bit-identical (equality-tested).
-        w_h = Window.orderBy(F.col(corpus_id))
-        head = (
-            res.orderBy(corpus_id)
-            .limit(n_codes)
-            .select(
-                (F.row_number().over(w_h) - 1).cast("int").alias("_cell"),
-                "_rv",
-            )
-        )
-        init = head.select(
-            "_cell",
-            F.posexplode(
-                F.array(
-                    *[
-                        F.slice("_rv", s * sub_dim + 1, sub_dim)
-                        for s in range(n_subspaces)
-                    ]
-                )
-            ).alias("_sub", "_cv"),
-        ).select(F.col("_sub").cast("int").alias("_sub"), "_cell", "_cv")
-        pcents, attach = _unrolled_pq_lloyd(
-            res, "_rv", n_subspaces, sub_dim, n_codes, n_iter, init
-        )
-        codes_wide = attach(res).select(F.col(corpus_id), "_cell", "_codes")
-        return {
-            "centroids": cents,
-            "codebook": pcents,
-            "codes": codes_wide,
-            "meta": _index_meta(
-                corpus, "ivfpq", n_centroids=n_centroids,
-                n_subspaces=n_subspaces, n_codes=n_codes, scale=scale, dim=dim,
-            ),
-        }
     if use_arrow:
         # Codebooks live ON THE DRIVER between iterations (they are
         # collected for the kernel constant anyway — a bounded

@@ -208,8 +208,8 @@ def main() -> None:
         "  large-star/small-star engine: edge-local O(log^2 n) rounds, no",
         "  per-round label-table materialization — ~26 s at ~sf1 and stable,",
         "  where the min-label engine measured 37-170 s depending on session",
-        "  block pressure. Round 8 made star the duplicate_clusters DEFAULT,",
-        "  so x1_dup_clusters and x1_dedup_resolve run it too.",
+        "  block pressure. Star is now duplicate_clusters' only engine, so",
+        "  x1_dup_clusters and x1_dedup_resolve run it too.",
         "- `x1_dup_spans_maximal` inherits x1_ngram_jaccard's output-mass",
         "  caveat on the replica: 10 near-copies per doc multiply the true",
         "  duplicated-span set, so time tracks output rows. Measured span",
